@@ -226,6 +226,12 @@ class _SidecarPartitions(MutableMapping):
             return repr(self._dict)
         return f"<_SidecarPartitions: {len(self)} labels, entries not materialized>"
 
+    def adopt(self, other: "_SidecarPartitions") -> None:
+        """Take over ``other``'s state in place, so references to this map
+        held across a commit stay bound to the manifest's partitions."""
+        for name in self.__slots__:
+            setattr(self, name, getattr(other, name))
+
 
 def _equality_segments(predicates, casters) -> list[list[str]] | None:
     """For a DNF of pure partition-key equality conjunctions whose
@@ -804,6 +810,15 @@ class DatasetManifest:
         object store the check maps to a conditional put (put-if-match on
         the manifest object), making it exact rather than read-check-swap —
         attach a :class:`ConditionalPutStore` to take that path.
+
+        A sidecar-layout commit leaves ``self.partitions`` as a reload would
+        (the lazy map over the columns just written). A lazy map already
+        held by the manifest takes that state in place, so a reference to
+        ``m.partitions`` taken before the commit stays live. A plain
+        ``dict`` cannot change type in place: when a commit promotes it to
+        the sidecar layout, ``self.partitions`` is rebound and the old dict
+        is detached from the manifest — re-read ``m.partitions`` after
+        ``commit()`` before mutating it.
         """
         if check_conflict and self._cond_store is None:
             disk_exists = type(self).exists(self.root, self.dataset_uuid)
@@ -848,7 +863,10 @@ class DatasetManifest:
                 # only commit then copies the sidecar file instead of
                 # re-encoding 1M entries; any entry mutation
                 # materializes dicts again (dict semantics preserved).
-                self.partitions = adopted
+                if isinstance(self.partitions, _SidecarPartitions):
+                    self.partitions.adopt(adopted)
+                else:
+                    self.partitions = adopted
         else:
             self._sidecar_ref = None
         if self.keep_history:

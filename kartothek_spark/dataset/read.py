@@ -3,12 +3,15 @@
 Re-expresses the reference read lifecycle (survey §3.1:
 ``read_table`` io/eager.py:344, ``dispatch_metapartitions_from_factory``
 io_components/read.py:75-178, ``MetaPartition.load_dataframes``
-metapartition.py:735-884 in /root/reference) Spark-first:
+metapartition.py:735-884 in the reference) Spark-first:
 
 * the PLANNER (driver, O(1) store round-trips) prunes the file list with
   the partition-key part of the DNF (labels parsed from hive paths) and
-  with secondary inverted indices (distributed filter over index tables,
-  collect labels only);
+  with secondary inverted indices (a filtered pyarrow scan of the index
+  table on the driver, streamed batch by batch so memory is bounded by
+  one batch plus the matching labels; float/double, timestamp and
+  decimal indices keep a distributed Spark filter) — an index-pruned
+  point read starts no Spark job before the scan;
 * the SCAN is one ``spark.read.parquet(*surviving_files)`` with
   ``basePath`` so partition columns are reconstructed typed from paths —
   Spark never even sees non-matching files, which is the entire point of

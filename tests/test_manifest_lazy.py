@@ -179,3 +179,32 @@ def test_pop_and_setitem(tmp_path):
     m.partitions["p=x/part-new.parquet"] = {"file": "lazy/table/p=x/part-new.parquet"}
     assert "p=x/part-new.parquet" in m.partitions
     assert m.query([[("p", "==", 0)]]) == []
+
+
+def test_partitions_reference_held_across_commit_stays_live(tmp_path):
+    """commit() adopts the just-encoded lazy columns into the map the
+    manifest already holds, so a reference taken before the commit keeps
+    writing through to the manifest; a plain dict promoted to the sidecar
+    layout is replaced (documented on commit())."""
+    root = _build(tmp_path)
+    m = DatasetManifest.load(root, "lazy")
+    parts = m.partitions
+    parts.pop("p=0/part-00000.parquet")  # materializes: commit re-encodes
+    m.commit()
+    assert m.partitions is parts
+    assert parts._dict is None  # adopted lazy state, as a reload gives
+    parts["p=x/part-new.parquet"] = {"file": "lazy/table/p=x/part-new.parquet"}
+    m.commit()
+    m2 = DatasetManifest.load(root, "lazy")
+    assert "p=x/part-new.parquet" in m2.partitions
+    assert "p=0/part-00000.parquet" not in m2.partitions
+    assert len(m2.partitions) == N
+
+    fresh = DatasetManifest(
+        dataset_uuid="fresh", root=root, schema=SCHEMA, partition_keys=["p"]
+    )
+    plain = fresh.partitions
+    plain.update(m2.partitions)
+    fresh.commit()
+    assert isinstance(fresh.partitions, _SidecarPartitions)
+    assert fresh.partitions is not plain
